@@ -31,8 +31,10 @@ object Memo {
       case _ => false
     }
   }
-  private val memo =
-    mutable.Map.empty[(SessionKey, String), scala.concurrent.Future[DataFrame]]
+  /** A build (possibly in flight) and whether it is truncate-flavor. */
+  private final case class Entry(frame: scala.concurrent.Future[DataFrame],
+      truncate: Boolean)
+  private val memo = mutable.Map.empty[(SessionKey, String), Entry]
 
   private def prune(): Unit =
     memo.filterInPlace { case ((k, _), _) => !k.s.sparkContext.isStopped }
@@ -53,10 +55,11 @@ object Memo {
     * driver-side planning on a 2000-row cached frame (guide §7.3);
     * truncated, the same rep is 0.1 s. The blocks spill to disk like
     * the persisted flavor (localCheckpoint's MEMORY_AND_DISK), and
-    * [[invalidate]] releases checkpoint blocks through
-    * `Frames.release`. Trade-off: the build runs eagerly at memo
-    * time, and evicted blocks cannot recompute (truncated lineage) —
-    * use for bounded index-sized frames only. */
+    * [[invalidate]] releases the checkpoint blocks of truncated
+    * entries (only those) through `Frames.release`. Trade-off: the
+    * build runs eagerly at memo time, and evicted blocks cannot
+    * recompute (truncated lineage) — use for bounded index-sized
+    * frames only. */
   def cached(spark: SparkSession, key: String,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       truncate: Boolean = false)(
@@ -65,10 +68,10 @@ object Memo {
     val owned = synchronized {
       prune()
       memo.get(k) match {
-        case Some(f) => Right(f)
+        case Some(e) => Right(e.frame)
         case None =>
           val p = scala.concurrent.Promise[DataFrame]()
-          memo.update(k, p.future)
+          memo.update(k, Entry(p.future, truncate))
           Left(p)
       }
     }
@@ -111,7 +114,7 @@ object Memo {
           // re-wedge the waiters the finally exists to free.
           try {
             if (res.isFailure) synchronized {
-              if (memo.get(k).exists(_ eq p.future)) memo.remove(k)
+              if (memo.get(k).exists(_.frame eq p.future)) memo.remove(k)
             }
           } finally p.tryComplete(res)
         }
@@ -131,28 +134,29 @@ object Memo {
     * every index for the whole pass. */
   def invalidate(spark: SparkSession, keyPrefix: String): Unit = synchronized {
     prune()
-    memo.filterInPlace { case ((k, key), f) =>
+    memo.filterInPlace { case ((k, key), e) =>
       if ((k.s eq spark) && key.startsWith(keyPrefix)) {
-        if (!spark.sparkContext.isStopped) f.value match {
-          // unpersist covers persist()-cached frames; Frames.release
-          // additionally frees localCheckpoint blocks of truncated
-          // entries (a no-op for everything else)
-          case Some(v) => v.foreach { df =>
-            df.unpersist(); graft.core.Frames.release(df)
-          }
+        // unpersist covers persist()-cached frames; only truncated
+        // entries ARE a checkpoint, so only they go through
+        // Frames.release — a persist entry built over a checkpointed
+        // frame would otherwise trip its derived-frame WARN
+        def drop(df: DataFrame): Unit = {
+          df.unpersist()
+          if (e.truncate) graft.core.Frames.release(df)
+        }
+        if (!spark.sparkContext.isStopped) e.frame.value match {
+          case Some(v) => v.foreach(drop)
           case None =>
             // in-flight build: the entry is dropped now, so when the
             // build finishes its cached DataFrame would stay persisted
             // but unreachable through Memo until session stop (ADVICE
             // r7) — unpersist it the moment it materializes instead.
-            f.onComplete(_.foreach { df =>
+            e.frame.onComplete(_.foreach { df =>
               // Try: the context can stop between the isStopped check
               // and unpersist; a throw here would only spam the global
               // EC's uncaught reporter (ADVICE r8).
               scala.util.Try {
-                if (!spark.sparkContext.isStopped) {
-                  df.unpersist(); graft.core.Frames.release(df)
-                }
+                if (!spark.sparkContext.isStopped) drop(df)
               }
             })(scala.concurrent.ExecutionContext.global)
         }

@@ -67,8 +67,22 @@ object Sources {
       .saveAsTable(table)
 
   /** S4 + E3 + O1 — run the full pipeline on an input file and write
-    * the three reference reports under `outDir` (parquet or csv).
-    * Returns the full cluster table. */
+    * the reference reports under `outDir` (parquet, csv or xlsx).
+    * Returns the full cluster table (lazy: an action on it evaluates
+    * the pipeline again; read the written reports instead).
+    *
+    * The pipeline is evaluated ONCE: its sorted contract projection
+    * ([[Outputs.clusters]], which carries every column the other
+    * reports read) is written as parquet a single time and read back
+    * with its known schema (no footer-inference job); `summary`,
+    * `mapping` and `review` are projections of that persisted table,
+    * so none of them re-runs the scan, the normalize chain or the
+    * election windows. For `parquet` the persisted table IS the
+    * `company_duplicates_final` report; for `csv`/`xlsx` it is a
+    * `_pipeline` parquet staging directory under `outDir`, deleted
+    * once the reports are written. A written file rather than a
+    * cached frame: it holds no block-manager storage and survives
+    * executor loss. */
   def runFile(spark: SparkSession, inPath: String, outDir: String,
       nameCol: Option[String] = None, rowOrderCol: Option[String] = None,
       settings: DedupSettings = DedupSettings(), format: String = "parquet"): DataFrame = {
@@ -84,29 +98,39 @@ object Sources {
           org.apache.spark.sql.functions.monotonically_increasing_id()), "_row_order")
     }
     val full = Pipeline.run(df, name, orderCol, settings)
-    if (format == "xlsx") {
-      // the reference's exact three-workbook layout (outputs.py:44-58)
-      new java.io.File(outDir).mkdirs()
-      Xlsx.write(Seq(
-        "clusters" -> Outputs.clusters(full),
-        "canonical_summary" -> Outputs.summary(full),
-        "settings" -> Outputs.settingsEcho(spark, settings)),
-        s"$outDir/company_duplicates_final.xlsx")
-      Xlsx.write(Seq("mapping" -> Outputs.mapping(full)),
-        s"$outDir/golden_mapping.xlsx")
-      Xlsx.write(Seq("review" -> Outputs.review(full)),
-        s"$outDir/high_confidence_review.xlsx")
-    } else {
-      def save(d: DataFrame, sub: String): Unit = {
-        val w = d.coalesce(1).write.mode("overwrite")
-        if (format == "csv") w.option("header", "true").csv(s"$outDir/$sub")
-        else w.parquet(s"$outDir/$sub")
+    val clusters = Outputs.clusters(full)
+    val staged = format == "csv" || format == "xlsx"
+    val tablePath = if (staged) s"$outDir/_pipeline" else s"$outDir/company_duplicates_final"
+    try {
+      clusters.coalesce(1).write.mode("overwrite").parquet(tablePath)
+      val table = spark.read.schema(clusters.schema).parquet(tablePath)
+      if (format == "xlsx") {
+        // the reference's exact three-workbook layout (outputs.py:44-58)
+        Xlsx.write(Seq(
+          "clusters" -> Outputs.clusters(table),
+          "canonical_summary" -> Outputs.summary(table),
+          "settings" -> Outputs.settingsEcho(spark, settings)),
+          s"$outDir/company_duplicates_final.xlsx")
+        Xlsx.write(Seq("mapping" -> Outputs.mapping(table)),
+          s"$outDir/golden_mapping.xlsx")
+        Xlsx.write(Seq("review" -> Outputs.review(table)),
+          s"$outDir/high_confidence_review.xlsx")
+      } else {
+        def save(d: DataFrame, sub: String): Unit = {
+          val w = d.coalesce(1).write.mode("overwrite")
+          if (format == "csv") w.option("header", "true").csv(s"$outDir/$sub")
+          else w.parquet(s"$outDir/$sub")
+        }
+        // a multi-split read may reorder the file's rows: re-sort
+        if (staged) save(Outputs.clusters(table), "company_duplicates_final")
+        save(Outputs.summary(table), "canonical_summary")
+        save(Outputs.settingsEcho(spark, settings), "settings")
+        save(Outputs.mapping(table), "golden_mapping")
+        save(Outputs.review(table), "high_confidence_review")
       }
-      save(Outputs.clusters(full), "company_duplicates_final")
-      save(Outputs.summary(full), "canonical_summary")
-      save(Outputs.settingsEcho(spark, settings), "settings")
-      save(Outputs.mapping(full), "golden_mapping")
-      save(Outputs.review(full), "high_confidence_review")
+    } finally if (staged) {
+      val p = new org.apache.hadoop.fs.Path(tablePath)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
     full
   }

@@ -132,23 +132,24 @@ object BandStore {
       try {
         // tryLock in a bounded retry loop (ADVICE r20): a blocking
         // lock() stalls the run indefinitely behind a hung peer
-        // holding the .lock file. ~3 s total, then fall back to the
-        // documented unlocked best-effort path (worst case: one run's
-        // samples lost to a concurrent merge — never a stalled run).
-        def tryAcquire(): Option[java.nio.channels.FileLock] = {
-          var left = 30
-          var got: Option[java.nio.channels.FileLock] = None
-          while (got.isEmpty && left > 0) {
-            got = scala.util.Try(Option(lockFile.getChannel.tryLock()))
-              .toOption.flatten
-            if (got.isEmpty) { Thread.sleep(100); left -= 1 }
+        // holding the .lock file. Only a null return (held by another
+        // process) is retried, ~3 s total; an exception (a lock this
+        // JVM already holds, an I/O error) cannot clear by waiting and
+        // stops at once. Either way the fallback is the documented
+        // unlocked best-effort path (worst case: one run's samples
+        // lost to a concurrent merge — never a stalled run).
+        @annotation.tailrec
+        def tryAcquire(left: Int): Either[String, java.nio.channels.FileLock] =
+          scala.util.Try(lockFile.getChannel.tryLock()) match {
+            case scala.util.Success(null) if left > 1 =>
+              Thread.sleep(100); tryAcquire(left - 1)
+            case scala.util.Success(null) => Left("timed out")
+            case scala.util.Success(l) => Right(l)
+            case scala.util.Failure(e) => Left(s"failed ($e)")
           }
-          got
-        }
-        val lock = tryAcquire()
-        if (lock.isEmpty)
-          System.err.println(s"WARN BandStore: lock on $path.lock timed out; " +
-            "appending unlocked (best-effort)")
+        val lock = tryAcquire(30)
+        lock.left.foreach(why => System.err.println(
+          s"WARN BandStore: lock on $path.lock $why; appending unlocked (best-effort)"))
         try appendLocked(path, sig, fresh)
         finally lock.foreach(l => scala.util.Try(l.release()))
       } finally lockFile.close()

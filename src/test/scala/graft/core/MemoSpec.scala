@@ -197,4 +197,27 @@ class MemoSpec extends AnyFunSuite {
     assert(attempts === 2 && ok.head().getInt(0) === 3)
     Memo.invalidate(spark)
   }
+
+  test("invalidating a persist entry built over a checkpointed memo prints no Frames.release WARN") {
+    import spark.implicits._
+    val ck = Memo.cached(spark, "memo-ck", truncate = true) { Seq(1, 2, 3).toDF("v") }
+    val ckRdd = ck.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    // persist flavor whose plan embeds the checkpoint leaf
+    val agg = Memo.cached(spark, "memo-ck-agg") {
+      ck.agg(org.apache.spark.sql.functions.max("v"))
+    }
+    assert(agg.head().getInt(0) === 3)
+    val err = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Memo.invalidate(spark, "memo-ck-agg") finally System.setErr(prev)
+    assert(!err.toString.contains("WARN Frames.release"), err.toString)
+    assert(!agg.storageLevel.useMemory, "persist entry was not unpersisted")
+    assert(spark.sparkContext.getPersistentRDDs.contains(ckRdd),
+      "invalidating the derived entry released the checkpoint it reads")
+    // the truncate entry itself still goes through Frames.release
+    Memo.invalidate(spark, "memo-ck")
+    assert(!spark.sparkContext.getPersistentRDDs.contains(ckRdd))
+  }
 }

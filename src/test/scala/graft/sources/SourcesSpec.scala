@@ -1,6 +1,10 @@
 package graft.sources
 
-import graft.dedup.SparkTest
+import graft.dedup.{DedupSettings, Outputs, Pipeline, SparkTest}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -83,5 +87,134 @@ class SourcesSpec extends AnyFunSuite {
         "dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp").collect()(0)
     assert(r.getDouble(0) == 0.8444444444444443)
     assert(r.getDouble(1) == 11.0)
+  }
+
+  /** Awkward names: padding, embedded commas and quotes, an empty
+    * and a null name, unicode, an all-suffix name and exact duplicates
+    * (so reports have ties and multi-row clusters). */
+  private val trickyNames: Seq[(Long, String)] = Seq("  IBM India Pvt Ltd  ", "IBM",
+    "Acme, Inc.", "ACME INC", "The \"Quoted\" Company Ltd", "", null,
+    "Société Générale S.A.", "SOCIETE GENERALE", "株式会社 トヨタ", "Ltd", "Ltd", "TCS",
+    "Tata Consultancy Services Limited", "IBM").zipWithIndex.map { case (n, i) => (i.toLong, n) }
+
+  /** `trickyNames` as an `id,name` input; csv when `file` ends in
+    * `.csv` (where the empty name reads back as null), else parquet. */
+  private def trickyInput(dir: java.io.File, file: String): String = {
+    import spark.implicits._
+    val path = new java.io.File(dir, file).getAbsolutePath
+    val w = trickyNames.toDF("id", "name").coalesce(1).write
+    if (file.endsWith(".csv")) w.option("header", "true").csv(path) else w.parquet(path)
+    path
+  }
+
+  /** Part-file contents of a Spark output directory, in name order. */
+  private def partFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).map(f => new String(Files.readAllBytes(f.toPath), "UTF-8")).toSeq
+
+  /** Every entry of an xlsx zip, by name. */
+  private def zipEntries(path: String): Map[String, String] = {
+    val z = new java.util.zip.ZipFile(path)
+    try {
+      import scala.jdk.CollectionConverters._
+      z.entries().asScala.map(e =>
+        e.getName -> new String(z.getInputStream(e).readAllBytes(), "UTF-8")).toMap
+    } finally z.close()
+  }
+
+  test("every runFile report equals its Outputs projection of a direct Pipeline.run") {
+    val dir = Files.createTempDirectory("graft_equiv").toFile
+    val input = trickyInput(dir, "tricky.parquet")
+    val full = Pipeline.run(Sources.read(spark, input), "name", "id")
+    val direct: Seq[(String, DataFrame)] = Seq(
+      "company_duplicates_final" -> Outputs.clusters(full),
+      "canonical_summary" -> Outputs.summary(full),
+      "settings" -> Outputs.settingsEcho(spark, DedupSettings()),
+      "golden_mapping" -> Outputs.mapping(full),
+      "high_confidence_review" -> Outputs.review(full))
+    // the inputs really are awkward: the null, empty and suffix-only
+    // names all reach the reports
+    assert(full.filter("original_name IS NULL").count() == 1)
+    assert(full.filter("original_name = ''").count() == 1)
+    assert(full.filter("base_name = ''").count() >= 4)
+
+    val pq = new java.io.File(dir, "pq").getAbsolutePath
+    Sources.runFile(spark, input, pq, Some("name"), Some("id"))
+    for ((sub, d) <- direct) {
+      val got = spark.read.parquet(s"$pq/$sub")
+      assert(got.columns.toSeq == d.columns.toSeq, sub)
+      assert(got.collect().toSeq == d.collect().toSeq, sub)
+    }
+
+    val csvOut = new java.io.File(dir, "csv").getAbsolutePath
+    val csvRef = new java.io.File(dir, "csv_ref").getAbsolutePath
+    Sources.runFile(spark, input, csvOut, Some("name"), Some("id"), format = "csv")
+    assert(!new java.io.File(csvOut, "_pipeline").exists())
+    for ((sub, d) <- direct) {
+      d.coalesce(1).write.option("header", "true").csv(s"$csvRef/$sub")
+      val got = partFiles(s"$csvOut/$sub")
+      assert(got.nonEmpty && got == partFiles(s"$csvRef/$sub"), sub)
+    }
+
+    val xl = new java.io.File(dir, "xlsx").getAbsolutePath
+    val xlRef = new java.io.File(dir, "xlsx_ref")
+    xlRef.mkdirs()
+    Sources.runFile(spark, input, xl, Some("name"), Some("id"), format = "xlsx")
+    assert(!new java.io.File(xl, "_pipeline").exists())
+    val byName = direct.toMap
+    Xlsx.write(Seq("clusters" -> byName("company_duplicates_final"),
+      "canonical_summary" -> byName("canonical_summary"),
+      "settings" -> byName("settings")), s"$xlRef/company_duplicates_final.xlsx")
+    Xlsx.write(Seq("mapping" -> byName("golden_mapping")), s"$xlRef/golden_mapping.xlsx")
+    Xlsx.write(Seq("review" -> byName("high_confidence_review")),
+      s"$xlRef/high_confidence_review.xlsx")
+    for (f <- Seq("company_duplicates_final.xlsx", "golden_mapping.xlsx",
+        "high_confidence_review.xlsx"))
+      assert(zipEntries(s"$xl/$f") == zipEntries(s"$xlRef/$f"), f)
+  }
+
+  test("runFile evaluates the normalize chain over its input at most twice") {
+    // every executed plan that runs regexp_replace over a scan of the
+    // input file is one evaluation of the normalize chain: the
+    // name-index build, then the single clusters write. A report
+    // computed from the lazy pipeline frame instead of the persisted
+    // table would add one per report.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def scansInput(p: SparkPlan, file: String): Boolean = nodes(p).exists {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName == file)
+      case _ => false
+    }
+    def regexOverInput(p: SparkPlan, file: String): Boolean = nodes(p).exists(n =>
+      n.expressions.exists(_.find(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.RegExpReplace]).isDefined) &&
+        scansInput(n, file))
+
+    val dir = Files.createTempDirectory("graft_once").toFile
+    val csv = trickyInput(dir, "once.csv")
+    for (format <- Seq("parquet", "csv", "xlsx")) {
+      val passes = new java.util.concurrent.atomic.AtomicInteger(0)
+      val marker = new java.util.concurrent.CountDownLatch(1)
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == "_guard_marker")) marker.countDown()
+          else if (regexOverInput(qe.executedPlan, "once.csv")) passes.incrementAndGet()
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        Sources.runFile(spark, csv, new java.io.File(dir, format).getAbsolutePath,
+          Some("name"), Some("id"), format = format)
+        // listener events arrive in order: once the marker query's
+        // event is in, every runFile plan has been seen
+        spark.range(1).toDF("_guard_marker").collect()
+        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(listener)
+      assert(passes.get >= 1, s"$format: the guard saw no normalize pass at all")
+      assert(passes.get <= 2, s"$format: ${passes.get} normalize passes over the input")
+    }
   }
 }

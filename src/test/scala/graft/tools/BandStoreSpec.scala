@@ -109,4 +109,24 @@ class BandStoreSpec extends AnyFunSuite {
       0.74, 0.78, 0.82, 0.85, 1.2, 1.6, 3.4, 6.5)
     assert(BandStore.derive(wide).get.spread === 2.0)
   }
+
+  test("append stops retrying at once when tryLock throws, and still appends unlocked") {
+    val p = tmpPath()
+    val held = new java.io.RandomAccessFile(p + ".lock", "rw")
+    try {
+      // a lock this JVM already holds: tryLock throws
+      // OverlappingFileLockException, which no amount of waiting clears
+      val lock = held.getChannel.lock()
+      val t0 = System.nanoTime()
+      BandStore.append(p, "sig-held", Seq(0.5))
+      val secs = (System.nanoTime() - t0) / 1e9
+      lock.release()
+      assert(secs < 1.0, s"append spun $secs s on a non-retryable lock error")
+      assert(BandStore.load(p, "sig-held") === Seq(0.5))
+    } finally {
+      held.close()
+      new java.io.File(p).delete()
+      new java.io.File(p + ".lock").delete()
+    }
+  }
 }
