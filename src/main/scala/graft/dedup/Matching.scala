@@ -33,14 +33,96 @@ object Matching {
     * per distinct name so the pair join compares keys instead of
     * re-sorting tokens per pair (O(names) sorts, not O(pairs)). */
   def nameStats(derived: DataFrame): DataFrame =
+    nameIndex(derived.filter(col("base_name") =!= ""))
+
+  /** [[nameStats]] without the empty-name filter: the empty base name
+    * is one more group, for callers that materialize the index and
+    * filter the materialized frame. A filter on `base_name` above a
+    * lazy derivation is pushed below every repartition, so over a
+    * spread single-split source it runs the whole normalize chain in
+    * the one scan task before the exchange (and again after it);
+    * filtering past a checkpoint keeps the chain after the spread. */
+  private[dedup] def nameIndex(derived: DataFrame): DataFrame =
     derived
-      .filter(col("base_name") =!= "")
       .groupBy("block_key", "base_name")
       .agg(
         count(lit(1)).as("n_rows"),
         min(col("row_order")).as("min_row"),
         max(col("row_order")).as("max_row"))
       .withColumn("token_key", concat_ws("", array_sort(split(col("base_name"), " "))))
+
+  /** Block-size histogram of a name index, collected as one row: the
+    * single measurement that sizes the whole name-level stage.
+    *  - `names`, `impliedPairs` (Σ C(|block|,2)), `maxBlock` over every
+    *    block: the driver fast path and the dense-regime gate;
+    *  - `hotKeys`: blocks over `settings.maxBlockNames` (bounded:
+    *    each holds > cap names, so ≤ |names|/cap keys);
+    *  - `smallNames`, `smallPairs`, `smallMaxBlock` over the under-cap
+    *    blocks: the full pair join's salt ([[saltChunks]]). */
+  final case class BlockHistogram(names: Long, impliedPairs: Long, maxBlock: Long,
+      hotKeys: Seq[String], smallNames: Long, smallPairs: Long, smallMaxBlock: Long)
+
+  /** The histogram aggregate as a one-row frame: per-block name counts,
+    * then every statistic of [[BlockHistogram]] plus the governor
+    * report columns of [[governorStats]] in a single global aggregate.
+    * `cap` = Long.MaxValue when no governor is set (nothing is hot). */
+  private def histogramFrame(stats: DataFrame, cap: Long): DataFrame = {
+    // SQL `/` is double division — n·(n-1) is always even, so the
+    // long cast after the halving is exact
+    val pairs = (col("_bn") * (col("_bn") - 1) / 2).cast("long")
+    val hot = col("_bn") > cap
+    stats.groupBy("block_key").agg(count(lit(1)).as("_bn"))
+      .agg(
+        count(lit(1)).as("total_blocks"),
+        coalesce(sum(when(hot, 1L).otherwise(0L)), lit(0L)).as("governed_blocks"),
+        coalesce(sum(when(hot, col("_bn")).otherwise(0L)), lit(0L)).as("governed_names"),
+        coalesce(sum(col("_bn")), lit(0L)).as("names"),
+        coalesce(sum(pairs), lit(0L)).as("implied_pairs"),
+        coalesce(max(col("_bn")), lit(0L)).as("max_block"),
+        collect_list(when(hot, col("block_key"))).as("hot_keys"),
+        coalesce(sum(when(!hot, col("_bn"))), lit(0L)).as("small_names"),
+        coalesce(sum(when(!hot, pairs)), lit(0L)).as("small_pairs"),
+        coalesce(max(when(!hot, col("_bn"))), lit(0L)).as("small_max_block"))
+  }
+
+  /** Collect the [[BlockHistogram]] of a materialized name index: one
+    * action, read by every sizing decision downstream. */
+  def blockHistogram(stats: DataFrame,
+      settings: DedupSettings = DedupSettings()): BlockHistogram = {
+    val r = histogramFrame(stats, settings.maxBlockNames.getOrElse(Long.MaxValue))
+      .select("names", "implied_pairs", "max_block", "hot_keys",
+        "small_names", "small_pairs", "small_max_block")
+      .head()
+    BlockHistogram(r.getLong(0), r.getLong(1), r.getLong(2), r.getSeq[String](3),
+      r.getLong(4), r.getLong(5), r.getLong(6))
+  }
+
+  /** Salt chunks for the full pair join of the under-cap blocks, from
+    * block skew rather than name count: k = ⌈4·cores·share⌉, share =
+    * the largest block's C(n,2) over all implied pairs, clamped to
+    * [1, 96]. With k chunks a block's heaviest join key holds about
+    * 2/(k+1) of its pairs, so no key carries more than ~1/(2·cores)
+    * of the join. Many small blocks need no salt (1 chunk: the block
+    * keys alone spread the join); one hot block gets 4·cores chunks.
+    * The fan-out multiplies the join's left side by ~(k+1)/2, so an
+    * unneeded salt is paid in shuffled rows. */
+  def saltChunks(hist: BlockHistogram, cores: Int): Int =
+    if (hist.smallPairs <= 0) 1
+    else {
+      val maxPairs = hist.smallMaxBlock.toDouble * (hist.smallMaxBlock - 1) / 2
+      math.ceil(4.0 * cores * maxPairs / hist.smallPairs).max(1.0).min(96.0).toInt
+    }
+
+  /** (chunks, join partitions) for a pair join: an explicit `salt` > 0
+    * wins, else [[saltChunks]]. The join is pinned at
+    * max(chunks, spark.sql.shuffle.partitions) partitions — a user
+    * repartition, so AQE cannot coalesce the tiny pre-join shuffle to
+    * one partition and serialize the pair explosion inside the join. */
+  private def joinShape(spark: org.apache.spark.sql.SparkSession, hist: BlockHistogram,
+      salt: Int): (Int, Int) = {
+    val chunks = if (salt > 0) salt else saltChunks(hist, spark.sparkContext.defaultParallelism)
+    (chunks, math.max(chunks, spark.conf.get("spark.sql.shuffle.partitions").toInt))
+  }
 
   /** Pair confidence ladder (engine.py:371-375). The 0.90/0.85 cut
     * points are fixed in the reference, independent of the settings
@@ -64,7 +146,9 @@ object Matching {
     * own, so the join key becomes (block_key, chunk) — `salt`-way
     * parallelism with each unordered pair generated exactly once:
     * cross-chunk pairs via the strictly-smaller chunk's fan-out,
-    * same-chunk pairs via the name< residual. */
+    * same-chunk pairs via the name< residual. `salt` <= 0 sizes the
+    * chunks from the block histogram's skew ([[saltChunks]]): many
+    * small blocks run unsalted, a hot block gets up to 96 chunks. */
   def qualifyingPairs(stats0: DataFrame, settings: DedupSettings = DedupSettings(),
       salt: Int = 0): DataFrame = {
     settings.engageCheckpoints(stats0.sparkSession)
@@ -85,49 +169,46 @@ object Matching {
     * needs the index for its own sizing — e.g. Pipeline's driver
     * fast-path gate, or the report queries sharing one Memo'd index
     * across the per-table pair family). The frame MUST be
-    * materialized (checkpointed or cached): the sizing aggregate and
-    * both join sides re-read it. */
+    * materialized (checkpointed or cached): the histogram aggregate
+    * and both join sides re-read it. A caller that already holds the
+    * index's [[BlockHistogram]] (computed under the same settings)
+    * passes it as `hist` and the plan is built without another job. */
   def qualifyingPairsPrepared(stats: DataFrame,
       settings: DedupSettings = DedupSettings(), salt: Int = 0,
-      pinSink: DataFrame => Unit = _ => ()): DataFrame = {
+      pinSink: DataFrame => Unit = _ => (),
+      hist: Option[BlockHistogram] = None): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    settings.maxBlockNames match {
-      case Some(cap) =>
-        // cost governor (default ON): over-cap blocks switch to the
-        // sorted-neighborhood O(|b|·w) policy (or are dropped when
-        // hotBlockWindow <= 1), bounding the quadratic worst case.
-        // One single-row aggregate sizes the whole plan: the over-cap
-        // key list is bounded (each hot block holds > cap names, so
-        // ≤ |names|/cap keys) and the small-side name count picks the
-        // salt without another job.
-        val sized = stats.groupBy("block_key").agg(count(lit(1)).as("_bn"))
-          .agg(
-            collect_list(when(col("_bn") > cap, col("block_key"))).as("_hot"),
-            sum(when(col("_bn") <= cap, col("_bn"))).as("_small"))
-          .head()
-        val hotKeys = sized.getSeq[String](0)
-        val smallNames = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-        if (hotKeys.nonEmpty) {
-          val policy =
-            if (settings.hotBlockWindow > 1)
-              s"sorted-neighborhood(window=${settings.hotBlockWindow})"
-            else "drop"
-          log.warn(s"cost governor: ${hotKeys.length} block(s) exceed " +
-            s"maxBlockNames=$cap — applying $policy to their pairs")
-        }
-        if (hotKeys.isEmpty) allPairs(stats, settings, salt, smallNames)
-        else {
-          val spark = stats.sparkSession
-          import spark.implicits._
-          val hotDf = broadcast(hotKeys.toDF("block_key"))
-          val small = stats.join(hotDf, Seq("block_key"), "left_anti")
-          val base = allPairs(small, settings, salt, smallNames)
-          if (settings.hotBlockWindow <= 1) base
-          else base.unionByName(sortedNeighborhoodPairs(
-            stats.join(hotDf, Seq("block_key"), "left_semi"),
-            settings.hotBlockWindow, settings, pinSink))
-        }
-      case None => allPairs(stats, settings, salt)
+    // cost governor (default ON): over-cap blocks switch to the
+    // sorted-neighborhood O(|b|·w) policy (or are dropped when
+    // hotBlockWindow <= 1), bounding the quadratic worst case
+    governed(stats, settings, hist)(
+      allPairs(_, settings, salt, _),
+      sortedNeighborhoodPairs(_, settings.hotBlockWindow, settings, pinSink))
+  }
+
+  /** The governor split shared by every pair path: full pairing over
+    * the under-cap blocks (sized by the histogram) plus, when a block
+    * is over `settings.maxBlockNames`, the hot-block policy over those
+    * blocks alone (nothing when `hotBlockWindow` <= 1). */
+  private def governed(stats: DataFrame, settings: DedupSettings,
+      hist: Option[BlockHistogram])(
+      full: (DataFrame, BlockHistogram) => DataFrame,
+      hot: DataFrame => DataFrame): DataFrame = {
+    val h = hist.getOrElse(blockHistogram(stats, settings))
+    if (h.hotKeys.isEmpty) full(stats, h)
+    else {
+      val policy =
+        if (settings.hotBlockWindow > 1)
+          s"sorted-neighborhood(window=${settings.hotBlockWindow})"
+        else "drop"
+      log.warn(s"cost governor: ${h.hotKeys.length} block(s) exceed " +
+        s"maxBlockNames=${settings.maxBlockNames.get} — applying $policy to their pairs")
+      val spark = stats.sparkSession
+      import spark.implicits._
+      val hotDf = broadcast(h.hotKeys.toDF("block_key"))
+      val base = full(stats.join(hotDf, Seq("block_key"), "left_anti"), h)
+      if (settings.hotBlockWindow <= 1) base
+      else base.unionByName(hot(stats.join(hotDf, Seq("block_key"), "left_semi")))
     }
   }
 
@@ -149,21 +230,18 @@ object Matching {
     * the governor cap (the hot-block policy is a distributed
     * concern), or the implied pair count exceeds `maxPairEstimate`
     * (driver pairing is single-threaded; 2M pairs ≈ 1–2 s is the
-    * break-even against executor parallelism). */
-  private[dedup] def driverPairsAndCandidates(statsCk: DataFrame,
+    * break-even against executor parallelism). All three gates read
+    * the index's histogram, so a miss costs no job. */
+  private[dedup] def driverPairsAndCandidates(statsCk: DataFrame, hist: BlockHistogram,
       settings: DedupSettings = DedupSettings(), maxPairEstimate: Long = 2000000L)
       : Option[(Seq[(Long, Long)], Seq[(String, Double, Long)])] = {
     import org.apache.spark.unsafe.types.UTF8String
     val limit = settings.driverFastPathNames
-    if (limit <= 0 || statsCk.count() > limit) return None
+    if (limit <= 0 || hist.names > limit || hist.impliedPairs > maxPairEstimate ||
+      hist.hotKeys.nonEmpty) return None
     val rows = statsCk
       .select("block_key", "base_name", "min_row", "max_row", "token_key").collect()
     val byBlock = rows.groupBy(_.getString(0))
-    val pairEst = byBlock.valuesIterator
-      .map(b => b.length.toLong * (b.length - 1) / 2).sum
-    val underCap = settings.maxBlockNames
-      .forall(cap => byBlock.valuesIterator.forall(_.length <= cap))
-    if (pairEst > maxPairEstimate || !underCap) return None
 
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     val nodes = scala.collection.mutable.Set.empty[Long]
@@ -244,7 +322,8 @@ object Matching {
     * same join, same thresholds, same reduction — pinned by
     * DensePathSpec. */
   private[dedup] def denseAggregatedStage(stats: DataFrame,
-      settings: DedupSettings, maxIter: Int = 50): (DataFrame, DataFrame) = {
+      settings: DedupSettings, hist: BlockHistogram, salt: Int = 0,
+      maxIter: Int = 50): (DataFrame, DataFrame) = {
     val spark = stats.sparkSession
     import spark.implicits._
     // Each pairs() pass may pin a fresh blockRanked checkpoint
@@ -257,8 +336,9 @@ object Matching {
       pins.foreach(graft.core.Frames.release)
       pins.clear()
     }
+    // every pass plans from the one histogram: no sizing job per pass
     def pairs(): DataFrame =
-      qualifyingPairsPrepared(stats, settings, pinSink = pins += _)
+      qualifyingPairsPrepared(stats, settings, salt, pins += _, Some(hist))
     val oriented = pairs().select(explode(array(
       struct(col("a_min_row").as("node"), col("b_min_row").as("peer"),
         col("a_name").as("name"), col("b_max_row").as("partner_max_row"),
@@ -345,33 +425,8 @@ object Matching {
   def pairProfile(stats: DataFrame,
       settings: DedupSettings = DedupSettings()): DataFrame = {
     settings.engageCheckpoints(stats.sparkSession)
-    val slim = settings.maxBlockNames match {
-      case Some(cap) =>
-        val sized = stats.groupBy("block_key").agg(count(lit(1)).as("_bn"))
-          .agg(
-            collect_list(when(col("_bn") > cap, col("block_key"))).as("_hot"),
-            sum(when(col("_bn") <= cap, col("_bn"))).as("_small"))
-          .head()
-        val hotKeys = sized.getSeq[String](0)
-        val smallNames = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-        if (hotKeys.nonEmpty) log.warn(s"cost governor: ${hotKeys.length} " +
-          s"block(s) exceed maxBlockNames=$cap — profiling their pairs under " +
-          (if (settings.hotBlockWindow > 1)
-            s"sorted-neighborhood(window=${settings.hotBlockWindow})" else "drop"))
-        if (hotKeys.isEmpty) slimPairs(stats, smallNames)
-        else {
-          val spark = stats.sparkSession
-          import spark.implicits._
-          val hotDf = broadcast(hotKeys.toDF("block_key"))
-          val small = stats.join(hotDf, Seq("block_key"), "left_anti")
-          val base = slimPairs(small, smallNames)
-          if (settings.hotBlockWindow <= 1) base
-          else base.unionByName(slimSorted(
-            stats.join(hotDf, Seq("block_key"), "left_semi"),
-            settings.hotBlockWindow))
-        }
-      case None => slimPairs(stats, -1L)
-    }
+    val slim = governed(stats, settings, None)(
+      slimPairs, slimSorted(_, settings.hotBlockWindow))
     val qual = (col("token_match") && col("ratio") >= settings.softThreshold) ||
       col("ratio") >= settings.hardThreshold
     slim.agg(
@@ -387,11 +442,8 @@ object Matching {
 
   /** [[allPairs]] slimmed to (ratio, token_match), no predicate, no
     * canonical swap — the profile-aggregation feed. */
-  private def slimPairs(capped: DataFrame, knownNames: Long): DataFrame = {
-    val s = {
-      val n = if (knownNames >= 0) knownNames else capped.count()
-      if (n < 500) 4 else 96
-    }
+  private def slimPairs(capped: DataFrame, hist: BlockHistogram): DataFrame = {
+    val (s, parts) = joinShape(capped.sparkSession, hist, 0)
     val salted = capped.withColumn("chunk", pmod(hash(col("base_name")), lit(s)))
     val a = salted.select(
       col("block_key"),
@@ -405,8 +457,8 @@ object Matching {
       col("token_key").as("r_token_key"),
       col("chunk"))
     // pinned repartition for the same AQE reason as allPairs
-    a.repartition(s, col("block_key"), col("chunk"))
-      .join(b.repartition(s, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
+    a.repartition(parts, col("block_key"), col("chunk"))
+      .join(b.repartition(parts, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
       .where(col("l_chunk") =!= col("chunk") || col("l_name") < col("r_name"))
       .select(jaro_winkler(col("l_name"), col("r_name")).as("ratio"),
         (col("l_token_key") === col("r_token_key")).as("token_match"))
@@ -439,31 +491,18 @@ object Matching {
     * policy instead of full pairing), and how many distinct names
     * those governed blocks hold. */
   def governorStats(stats: DataFrame,
-      settings: DedupSettings = DedupSettings()): DataFrame = {
-    val cap = settings.maxBlockNames.getOrElse(Long.MaxValue)
-    stats.groupBy("block_key").agg(count(lit(1)).as("n_names"))
-      .agg(
-        count(lit(1)).as("total_blocks"),
-        coalesce(sum(when(col("n_names") > cap, 1L).otherwise(0L)), lit(0L))
-          .as("governed_blocks"),
-        coalesce(sum(when(col("n_names") > cap, col("n_names")).otherwise(0L)), lit(0L))
-          .as("governed_names"))
-  }
+      settings: DedupSettings = DedupSettings()): DataFrame =
+    histogramFrame(stats, settings.maxBlockNames.getOrElse(Long.MaxValue))
+      .select("total_blocks", "governed_blocks", "governed_names")
 
   /** Full within-block pairing (salted; see the scaladoc above).
     * `capped` is (derived from) the checkpointed name index, so the
     * two join sides re-read materialized blocks, not the upstream
-    * aggregation. `knownNames` < 0 → count here (one cheap job over
-    * the checkpoint). */
+    * aggregation; `hist` is that index's histogram and sizes the salt
+    * from its under-cap blocks. */
   private def allPairs(capped: DataFrame, settings: DedupSettings,
-      salt: Int, knownNames: Long = -1L): DataFrame = {
-    // salt <= 0 → adaptive: tiny name sets skip the wide fan-out (a
-    // 96-way shuffle of 64 names is pure scheduling overhead), big
-    // ones get full parallelism.
-    val s = if (salt > 0) salt else {
-      val n = if (knownNames >= 0) knownNames else capped.count()
-      if (n < 500) 4 else 96
-    }
+      salt: Int, hist: BlockHistogram): DataFrame = {
+    val (s, parts) = joinShape(capped.sparkSession, hist, salt)
     val salted = capped.withColumn("chunk", pmod(hash(col("base_name")), lit(s)))
     val a = salted.select(
       col("block_key"),
@@ -480,12 +519,12 @@ object Matching {
       col("max_row").as("r_max_row"),
       col("token_key").as("r_token_key"),
       col("chunk"))
-    // Explicit repartition with a fixed partition count: the pre-join
-    // shuffle is tiny (names), so AQE would coalesce it to one
-    // partition and serialize the O(|b|²) pair explosion that happens
-    // INSIDE the join. A user repartition pins the parallelism.
-    val joined = a.repartition(s, col("block_key"), col("chunk"))
-      .join(b.repartition(s, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
+    // Explicit repartition with a fixed partition count (joinShape):
+    // the pre-join shuffle is tiny (names), so AQE would coalesce it
+    // to one partition and serialize the O(|b|²) pair explosion that
+    // happens INSIDE the join. A user repartition pins the parallelism.
+    val joined = a.repartition(parts, col("block_key"), col("chunk"))
+      .join(b.repartition(parts, col("block_key"), col("chunk")), Seq("block_key", "chunk"))
       .where(col("l_chunk") =!= col("chunk") || col("l_name") < col("r_name"))
     // canonical a<b orientation regardless of which chunk fanned out
     val aIsL = col("l_name") < col("r_name")

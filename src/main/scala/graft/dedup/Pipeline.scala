@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   * are tiny relative to the row table, so every join back to rows is
   * AQE-broadcastable.
   *
-  * Execution semantics: [[run]] is NOT fully lazy — the compact pair
-  * projection and the CC edge set are eagerly materialized via
-  * `localCheckpoint(true)` (the Jaro-Winkler pair join runs inside
+  * Execution semantics: [[run]] is NOT fully lazy — the name index,
+  * the compact pair projection and the CC edge set are eagerly
+  * materialized via `localCheckpoint(true)`, and the index's block
+  * histogram is collected (the Jaro-Winkler pair join runs inside
   * this call, once, before the caller acts on the result). Local
   * checkpoints trade fault tolerance for lineage truncation: the
   * blocks live on executors with no recompute path, so an executor
@@ -33,17 +34,6 @@ import org.apache.spark.sql.functions._
   * `checkpoint()` instead: same plan shape, one extra write, identical
   * results (ReliableCheckpointSpec). */
 object Pipeline {
-
-  /** Σ |block|·(|block|-1)/2 over the (materialized) name index —
-    * one tiny aggregate job, the same estimate the driver fast path
-    * and the governor sizing use. */
-  private[dedup] def pairEstimate(stats: org.apache.spark.sql.DataFrame): Long = {
-    // SQL `/` is double division — n·(n-1) is always even, so the
-    // long cast after the halving is exact
-    val r = stats.groupBy("block_key").agg(count(lit(1)).as("_n"))
-      .agg(sum((col("_n") * (col("_n") - 1) / 2).cast("long"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
 
   /** Typed row of the pipeline output — for callers who want
     * compile-time field checks on the contract table. */
@@ -94,7 +84,14 @@ object Pipeline {
     * inside the pipeline — results are bit-identical because the
     * derivation is deterministic. */
   def runDerived(derivedFull: DataFrame,
-      settings: DedupSettings = DedupSettings()): DataFrame = {
+      settings: DedupSettings = DedupSettings()): DataFrame =
+    runDerived(derivedFull, settings, salt = 0)
+
+  /** [[runDerived]] with the pair join's salt chunks fixed (`salt` > 0)
+    * instead of sized from the block histogram — results never depend
+    * on it (PipelineSpec pins the equality). */
+  private[dedup] def runDerived(derivedFull: DataFrame, settings: DedupSettings,
+      salt: Int): DataFrame = {
     val derived = derivedFull
       .select("row_order", "original_name", "normalized_name", "base_name", "block_key")
 
@@ -106,8 +103,16 @@ object Pipeline {
     settings.engageCheckpoints(spark)
     val reliable = settings.reliableCheckpoints
     // Name index materialized ONCE; every branch below (fast-path
-    // sizing, pair join sides, row-level joins) reads the blocks.
-    val stats = graft.core.Frames.materialize(Matching.nameStats(derived), reliable)
+    // sizing, pair join sides, row-level joins) reads the blocks. The
+    // empty base name is grouped with the rest and filtered off the
+    // checkpoint: above the lazy derivation the filter would be pushed
+    // below the source spread, into the scan task (Matching.nameIndex).
+    val stats = graft.core.Frames.materialize(Matching.nameIndex(derived), reliable)
+      .filter(col("base_name") =!= "")
+    // ...and sized ONCE: one histogram action feeds the driver fast
+    // path gate, the dense-regime gate, the CC edge bound, the
+    // governor's hot keys and the pair join's salt.
+    val hist = Matching.blockHistogram(stats, settings)
 
     // The pair join (the Jaro-Winkler work) has two consumers — the
     // CC edge set and the confidence candidates. Materializing the
@@ -124,19 +129,16 @@ object Pipeline {
     // all of it: Matching.driverPairsAndCandidates computes the same
     // (components, candidates) in one driver pass — bit-identical
     // results, ~6 fewer jobs (the Cluster.localEdgeCC philosophy
-    // applied to the whole name-level stage).
-    // lazy: the driver fast path never needs the estimate; the other
-    // two branches share ONE aggregate job (the regime guard and the
-    // CC gate both read it)
-    lazy val impliedPairs = Pipeline.pairEstimate(stats)
+    // applied to the whole name-level stage). The histogram decides
+    // the fast path, so an index it rejects costs no collect.
     val (comps, crossCand) =
-      Matching.driverPairsAndCandidates(stats, settings) match {
+      Matching.driverPairsAndCandidates(stats, hist, settings) match {
         case Some((compsLocal, candLocal)) =>
           import spark.implicits._
           Matching.recordStage("driver-fast-path", 1)
           (compsLocal.toDF("id", "component"),
             candLocal.toDF("cand_name", "cand_conf", "partner_max_row"))
-        case None if impliedPairs > settings.densePairEstimate =>
+        case None if hist.impliedPairs > settings.densePairEstimate =>
           // DENSE regime (sf1+ supplier: a 10k-name near-clique is
           // 50M implied pairs): checkpointing the pair rows costs
           // gigabytes of storage + GC churn while the codegen'd JW
@@ -144,11 +146,11 @@ object Pipeline {
           // push both consumers down to aggregates over the streamed
           // join (one shared pass + one verification pass per CC
           // round). See Matching.denseAggregatedStage.
-          Matching.denseAggregatedStage(stats, settings)
+          Matching.denseAggregatedStage(stats, settings, hist, salt)
         case None =>
           Matching.recordStage("materialize", 1)
           val pairsCompact = graft.core.Frames.materialize(
-            Matching.qualifyingPairsPrepared(stats, settings)
+            Matching.qualifyingPairsPrepared(stats, settings, salt, hist = Some(hist))
               .select(col("a_min_row"), col("b_min_row"), col("pair_conf")),
             reliable)
           // --- C1 (distributed): node id = the name's min_row, so a
@@ -164,7 +166,7 @@ object Pipeline {
           // already fits the driver, CC skips the pre-contraction
           // constant outright (VERDICT r15 item 1)
           val compsDist = Cluster.connectedComponents(edges,
-            edgesMaterialized = true, edgeCountHint = impliedPairs,
+            edgesMaterialized = true, edgeCountHint = hist.impliedPairs,
             reliable = reliable)
           // name fields recovered from the compact checkpoint: AQE
           // turns both min_row joins into broadcasts (the name index

@@ -84,4 +84,30 @@ class MatchingSpec extends AnyFunSuite {
     val snAll = pairSet(Matching.sortedNeighborhoodPairs(stats, window = maxBlock.toInt + 1))
     assert(snAll == full)
   }
+
+  test("block histogram: one row sizes the index; the salt follows block skew") {
+    import spark.implicits._
+    val h = Matching.blockHistogram(stats)
+    val sizes = stats.groupBy("block_key").count().collect().map(_.getLong(1))
+    assert(h.names == sizes.sum && h.maxBlock == sizes.max)
+    assert(h.impliedPairs == sizes.map(n => n * (n - 1) / 2).sum)
+    assert(h.hotKeys.isEmpty && h.smallPairs == h.impliedPairs)
+    val capped = Matching.blockHistogram(stats, DedupSettings(maxBlockNames = Some(sizes.max - 1)))
+    assert(capped.hotKeys.nonEmpty && capped.smallMaxBlock < h.maxBlock)
+    assert(capped.smallNames + sizes.filter(_ > sizes.max - 1).sum == h.names)
+
+    def index(names: Seq[String]) = Matching.nameStats(Normalize.withDerived(
+      names.zipWithIndex.map { case (n, i) => (i.toLong, n) }.toDF("id", "name"), "name", "id"))
+    val cores = spark.sparkContext.defaultParallelism
+    // one hot block: its share of the pairs is 1, so it is split
+    val oneBlock = Matching.blockHistogram(index((0 until 200).map(i => f"HOTCO X$i%03d")))
+    assert(oneBlock.impliedPairs == 200L * 199 / 2)
+    assert(Matching.saltChunks(oneBlock, cores) > 1)
+    // many blocks of two: no single block is worth a salt
+    val spread = Matching.blockHistogram(index((0 until 500).flatMap(i =>
+      Seq(f"FIRM$i%03d BETA", f"FIRM$i%03d BETE"))))
+    assert(spread.maxBlock == 2 && Matching.saltChunks(spread, cores) == 1)
+    // no pairs at all
+    assert(Matching.saltChunks(Matching.blockHistogram(index(Seq("SOLO"))), cores) == 1)
+  }
 }

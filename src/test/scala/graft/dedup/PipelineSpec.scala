@@ -93,4 +93,79 @@ class PipelineSpec extends AnyFunSuite {
       DedupSettings(driverFastPathNames = 0L)).orderBy("row_order").collect()
     assert(fast.length == 60 && fast.toSeq == dist.toSeq)
   }
+
+  /** Actions that aggregate the materialized name index (the checkpoint
+    * carrying `token_key`) down to one row: the index's sizing. */
+  private def sizesNameIndex(qe: org.apache.spark.sql.execution.QueryExecution): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val plan = qe.analyzed
+    plan.exists {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.output.exists(_.name == "token_key")
+      case _ => false
+    } && plan.exists {
+      case a: Aggregate => a.groupingExpressions.isEmpty
+      case _ => false
+    } && !plan.exists(_.isInstanceOf[Join])
+  }
+
+  test("materialize regime: one histogram action sizes the name index, no fan-out past the shuffle partitions") {
+    import spark.implicits._
+    // 4,400 distinct names (over driverFastPathNames = 4096) in 2,200
+    // blocks of two, each a one-letter typo pair: the materialize regime
+    val df = (0 until 2200).flatMap { i =>
+      Seq((2L * i, f"VENDOR$i%04d ALPHA"), (2L * i + 1, f"VENDOR$i%04d ALPHE"))
+    }.toDF("id", "nm")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val sizing = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "_guard_marker")) marker.countDown()
+        else if (sizesNameIndex(qe)) sizing.incrementAndGet()
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val full = try {
+      val full = Pipeline.run(df, "nm", "id")
+      assert(full.filter($"cluster_size" === 2L).count() == 4400L)
+      spark.range(1).toDF("_guard_marker").collect()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      full
+    } finally spark.listenerManager.unregister(listener)
+    assert(Matching.lastStageStats.map(_.regime).contains("materialize"))
+    assert(sizing.get == 1, s"${sizing.get} sizing actions over the name index")
+    // the run's checkpoints (name index, compact pairs): small blocks
+    // need no salt, so nothing is spread wider than the shuffle
+    // partitions
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val ckpts = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(ckpts.size >= 2, s"checkpoints seen: ${ckpts.keys}")
+    ckpts.values.foreach(r => assert(r.getNumPartitions <= parts,
+      s"checkpoint ${r.id} has ${r.getNumPartitions} partitions > $parts"))
+    assert(full.columns.contains("cluster_id")) // keeps the checkpoints referenced
+  }
+
+  test("pipeline output does not depend on the pair join's salt") {
+    import spark.implicits._
+    // 300 names in one hot block (under the governor cap) next to 400
+    // two-name blocks, duplicated rows and an empty name; the fast
+    // path is off so the salted pair join runs
+    val hot = (0 until 300).map(i => f"HOTCO X$i%03d")
+    val small = (0 until 400).flatMap(i => Seq(f"FIRM$i%03d BETA", f"FIRM$i%03d BETE"))
+    val names = hot ++ small ++ small.take(50) ++ Seq("", "Ltd")
+    val df = names.zipWithIndex.map { case (n, i) => (i.toLong, n) }.toDF("id", "nm")
+    val settings = DedupSettings(driverFastPathNames = 0L)
+    val stats = Matching.nameStats(Normalize.withDerived(df, "nm", "id")).cache()
+    val chunks = Matching.saltChunks(Matching.blockHistogram(stats, settings),
+      spark.sparkContext.defaultParallelism)
+    stats.unpersist()
+    assert(chunks > 1 && chunks < 96, s"adaptive salt $chunks")
+    val adaptive = Pipeline.run(df, "nm", "id", settings).orderBy("row_order").collect()
+    val salted = Pipeline.runDerived(Normalize.withDerived(df, "nm", "id", settings),
+      settings, salt = 96).orderBy("row_order").collect()
+    assert(adaptive.length == names.length && adaptive.toSeq == salted.toSeq)
+  }
 }

@@ -4,6 +4,7 @@ import graft.dedup.{DedupSettings, Outputs, Pipeline, SparkTest}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -173,48 +174,99 @@ class SourcesSpec extends AnyFunSuite {
       assert(zipEntries(s"$xl/$f") == zipEntries(s"$xlRef/$f"), f)
   }
 
+  /** Every node of an executed plan, through AQE wrappers and stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  private def isScanOf(n: SparkPlan, file: String): Boolean = n match {
+    case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName == file)
+    case _ => false
+  }
+
+  private def scansInput(p: SparkPlan, file: String): Boolean =
+    nodes(p).exists(isScanOf(_, file))
+
+  private def evalsRegex(n: SparkPlan): Boolean =
+    n.expressions.exists(_.find(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.RegExpReplace]).isDefined)
+
+  /** Run `body`, handing the executed plan of every query it ran to
+    * `seen` (on the listener thread). */
+  private def withPlans(seen: SparkPlan => Unit)(body: => Unit): Unit = {
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "_guard_marker")) marker.countDown()
+        else seen(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once the marker query's
+      // event is in, every plan of `body` has been seen
+      spark.range(1).toDF("_guard_marker").collect()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("runFile evaluates the normalize chain over its input at most twice") {
     // every executed plan that runs regexp_replace over a scan of the
     // input file is one evaluation of the normalize chain: the
     // name-index build, then the single clusters write. A report
     // computed from the lazy pipeline frame instead of the persisted
     // table would add one per report.
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
-    def scansInput(p: SparkPlan, file: String): Boolean = nodes(p).exists {
-      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName == file)
-      case _ => false
-    }
-    def regexOverInput(p: SparkPlan, file: String): Boolean = nodes(p).exists(n =>
-      n.expressions.exists(_.find(_.isInstanceOf[
-        org.apache.spark.sql.catalyst.expressions.RegExpReplace]).isDefined) &&
-        scansInput(n, file))
+    def regexOverInput(p: SparkPlan, file: String): Boolean =
+      nodes(p).exists(n => evalsRegex(n) && scansInput(n, file))
 
     val dir = Files.createTempDirectory("graft_once").toFile
     val csv = trickyInput(dir, "once.csv")
     for (format <- Seq("parquet", "csv", "xlsx")) {
       val passes = new java.util.concurrent.atomic.AtomicInteger(0)
-      val marker = new java.util.concurrent.CountDownLatch(1)
-      val listener = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          if (qe.analyzed.output.exists(_.name == "_guard_marker")) marker.countDown()
-          else if (regexOverInput(qe.executedPlan, "once.csv")) passes.incrementAndGet()
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
+      withPlans(p => if (regexOverInput(p, "once.csv")) passes.incrementAndGet()) {
         Sources.runFile(spark, csv, new java.io.File(dir, format).getAbsolutePath,
           Some("name"), Some("id"), format = format)
-        // listener events arrive in order: once the marker query's
-        // event is in, every runFile plan has been seen
-        spark.range(1).toDF("_guard_marker").collect()
-        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      } finally spark.listenerManager.unregister(listener)
+      }
       assert(passes.get >= 1, s"$format: the guard saw no normalize pass at all")
       assert(passes.get <= 2, s"$format: ${passes.get} normalize passes over the input")
     }
+  }
+
+  test("runFile keeps the normalize chain above the source spread's exchange") {
+    // A single-split CSV over the spread gate's 64 KB: Pipeline.run
+    // repartitions it across the cores before the 14-regex chain. A
+    // filter on the derived base name that Catalyst pushes below that
+    // exchange drags the chain into the one scan task, where it runs
+    // serially before running again in parallel after the exchange.
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_spread").toFile
+    val csv = new java.io.File(dir, "spread.csv").getAbsolutePath
+    (0 until 4000).map(i => (i.toLong, f"Vendor$i%05d Trading Company Pvt Ltd"))
+      .toDF("id", "name").coalesce(1).write.option("header", "true").csv(csv)
+    // the nodes an exchange's child stage runs, down to the next
+    // exchange: the work done before that shuffle
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap {
+      case _: Exchange | _: QueryStageExec => Nil
+      case c => stage(c)
+    }
+    val spreads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val regexBelow = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    withPlans { p =>
+      nodes(p).collect { case e: Exchange => stage(e.child) }
+        .filter(_.exists(isScanOf(_, "spread.csv")))
+        .foreach { below =>
+          spreads.incrementAndGet()
+          below.filter(evalsRegex).foreach(n => regexBelow.add(n.nodeName))
+        }
+    } {
+      Sources.runFile(spark, csv, new java.io.File(dir, "out").getAbsolutePath,
+        Some("name"), Some("id"))
+    }
+    assert(spreads.get >= 1, "the input was never spread: the guard checked nothing")
+    assert(regexBelow.isEmpty,
+      s"regexp_replace evaluated beneath the spread's exchange in: $regexBelow")
   }
 }
